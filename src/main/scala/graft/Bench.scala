@@ -239,14 +239,6 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     println(s"""{"metric":"total_summary","value":$total,"unit":"sec","cold_total":$cold,"iters":$iters,"nqueries":${results.length},"failed":$failedJson,$diag,"full_json":"$outPath","sf":"$sfDir"}""")
-    // Repeat the complete per-query line as the FINAL stdout line (round-17
-    // verdict #2): the driver's capture window is tail-biased, so the
-    // identical line printed FIRST (above) has been lost since r14 and
-    // PERF_r*.json's per_query map has come back empty. Printing it again
-    // here — after the chunks and the summary — puts the full
-    // {"metric":"total",…,"queries":{…}} payload where tail capture keeps
-    // it. Pure addition: every previously-emitted line is unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$cold,"iters":$iters,"failed":$failedJson,$diag,"queries":$qs,"spread":$spread,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -80,7 +80,7 @@ object SparkEntry {
     val p = java.nio.file.Files.createTempDirectory("graft_stage_")
     // deleteOnExit() cannot remove a non-empty directory (round-17
     // ADVICE): a shutdown hook walks the tree children-first instead,
-    // so every JVM invocation (bench, verify, probes) reclaims its
+    // so every JVM invocation (bench, verify, tests) reclaims its
     // staged parquet rather than leaving it in /tmp forever.
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try {
@@ -103,7 +103,7 @@ object SparkEntry {
     * with temp checkpoints, deleted after every run — but each
     * micro-batch fsyncs offset log, commit log and per-partition
     * state deltas, and /tmp here is ext4: ~100 ms of pure disk-commit
-    * latency per batch (StreamProfileProbe round 18: walCommit
+    * latency per batch (OPTIMIZATION_r18.md "VERDICT item 4": walCommit
     * ~45 ms + commitOffsets ~40 ms per batch, state commits inside
     * addBatch on top). A RAM-backed fs (/dev/shm) makes those
     * ephemeral syncs memory-speed. Production deployments that need
@@ -139,12 +139,30 @@ object SparkEntry {
       name + "_" + java.util.UUID.randomUUID().toString.replace("-", ""))
 
   /** Checkpoint dir keyed by the (UUID-unique) memory-sink name, so
-    * the writeStream site allocates it inline and `drainMemorySink`
+    * the writeStream site allocates it inline and `runStream`
     * deletes it after the stream stops. */
-  private val ckptBySink =
+  private[graft] val ckptBySink =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]
-  private def streamCkptFor(sink: String): java.nio.file.Path =
+  private[graft] def streamCkptFor(sink: String): java.nio.file.Path =
     ckptBySink.computeIfAbsent(sink, n => streamCkpt(n))
+
+  /** Run the memory-sink stream `start` launches to completion. The
+    * stream owns its ephemeral checkpoint (offset/commit WAL + state
+    * deltas): on every path — a failed start, a batch that throws, or
+    * success — the query is stopped and the checkpoint entry and
+    * directory are dropped. On failure the sink's temp view goes too;
+    * on success it stays for `drainMemorySink`. */
+  private[graft] def runStream(s: SparkSession, sink: String)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    } catch { case e: Throwable =>
+      s.catalog.dropTempView(sink)
+      throw e
+    } finally {
+      Option(ckptBySink.remove(sink)).foreach(p => dropStagingDir(s, p))
+    }
 
   /** Drain a FINISHED memory-sink stream: copy the sink's rows out
     * eagerly (localCheckpoint), then drop the sink's temp view so the
@@ -159,9 +177,6 @@ object SparkEntry {
       s: SparkSession, sink: String, df: DataFrame): DataFrame = {
     val out = df.localCheckpoint() // eager copy out of the sink
     s.catalog.dropTempView(sink)
-    // the run's ephemeral checkpoint (offset/commit WAL + state
-    // deltas) dies with the stream it served
-    Option(ckptBySink.remove(sink)).foreach(p => dropStagingDir(s, p))
     out
   }
 
@@ -3020,7 +3035,7 @@ object SparkEntry {
     // 32; the conf only pins THIS query's state layout (checkpoints are
     // per-run temp dirs, so no stored-state compatibility concern)
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.nearDupStream(
@@ -3032,7 +3047,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     drainMemorySink(s, sink,
       s.table(sink).select(col("id1"), col("id2"), col("est_jaccard")))
       .distinct()
@@ -4105,7 +4120,7 @@ object SparkEntry {
     // Execution plans each batch fresh — no cross-batch broadcast
     // reuse), so without the cut each of the 4 batches re-scans the
     // customer parquet; with it they rebuild from the narrow
-    // checkpointed blocks (round-18 StreamProfileProbe measurement)
+    // checkpointed blocks (OPTIMIZATION_r18.md "VERDICT item 4")
     val dim = t(s, dir, "customer")
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))
@@ -4113,7 +4128,7 @@ object SparkEntry {
     val sink = "q93_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.enrich(src, dim, Seq("user_id"))
@@ -4124,7 +4139,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     drainMemorySink(s, sink,
       s.table(sink).select(col("segment"), col("n"), col("total_value")))
   }
@@ -4260,7 +4275,7 @@ object SparkEntry {
     val sink = "q96_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.intervalJoin(
@@ -4275,7 +4290,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     drainMemorySink(s, sink,
       s.table(sink).select(col("user_id"), col("view_id"),
         col("purchase_id")))
@@ -4815,7 +4830,7 @@ object SparkEntry {
     val sink = "q107_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.dedupStream(
@@ -4825,7 +4840,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     // project BEFORE the drain: the sink buffers full texts; the
     // checkpointed copy carries only (doc_id, text_len)
     drainMemorySink(s, sink,
@@ -7635,7 +7650,8 @@ object SparkEntry {
 
   // ------------------------------------------------------------------
   // q157 — salted skew join (Partitioning.saltedJoin, until now only
-  // spec- and SkewBench-covered): per-nation supplied quantity through
+  // spec-covered; skew evidence in NOTES.md "saltedJoin skew
+  // evidence"): per-nation supplied quantity through
   // the salted lineitem⋈supplier join — inner-join semantics unchanged
   // by construction, which is exactly what the oracle's PLAIN join
   // checks. salt=32 matches the local[32] lane count; the hot key's
@@ -7816,7 +7832,7 @@ object SparkEntry {
     val sink = "q160_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.cusumStream(
@@ -7827,7 +7843,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     drainMemorySink(s, sink,
       s.table(sink).select(col("key").as("user_id"),
         col("id").as("event_id"), col("s_alarm"), col("alarm_seq")))
@@ -8143,7 +8159,7 @@ object SparkEntry {
     val sink = "q168_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
+    runStream(s, sink) {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         graft.streaming.Streaming.kmvWindowedDistinct(
@@ -8154,7 +8170,7 @@ object SparkEntry {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
           .start()
       } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable() finally q.stop()
+    }
     drainMemorySink(s, sink, s.table(sink))
   }
 

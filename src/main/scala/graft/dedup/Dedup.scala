@@ -617,7 +617,7 @@ object Dedup {
       // measured reason: the joined arm attaches two multi-KB vms
       // payloads to the candidate-pair stream, and at the 1.5M-doc
       // x300 rung that step alone went 11.8 s → 127 s for exactly-3×
-      // candidate volume (PairStageProbe: every cardinality linear,
+      // candidate volume (NOTES.md round-13 log: every cardinality linear,
       // the verify join 10.8× — non-spillable hash builds + a
       // ~100 GB widened pair stream on an 8 g box). Here the shingle
       // sets ride the ONE grouping shuffle as struct members
@@ -1625,9 +1625,9 @@ object Dedup {
     // shuffle_hash, not sort-merge: the pair stream widens to multi-KB
     // rows once sh1 attaches, and SMJ would SORT that wide stream at
     // the id2 exchange — the x100 ladder A/B measured the hash join
-    // ~1.5-2x faster and far less spill-noisy (NOTES.md "verify-join
-    // A/B", graft.VerifyJoinProbe). The hint sits on the docs side, so
-    // the per-partition hash build is |docs|/buildParts rows — the
+    // ~1.5-2x faster and far less spill-noisy (NOTES.md "Pair-verify
+    // stage attribution + verify-join A/B"). The hint sits on the docs
+    // side, so the per-partition hash build is |docs|/buildParts rows — the
     // narrow side. The explicit repartition pins the join width to
     // [[jaccardBuildParts]]'s volume-derived count (the build side
     // satisfies the join's required distribution, so no extra
@@ -1894,9 +1894,9 @@ object Dedup {
     * previous count-then-join-back form re-ran the kernel for the
     * broadcast df branch; a sort-merge pin did NOT restore exchange
     * reuse because the df branch column-prunes to bare `g` rows —
-    * GramReuseProbe measured the window form at x100: 13.1 s vs
-    * 17.7 s broadcast / 18.8 s merge, shuffle 1.40 vs 2.00 GB, sigs
-    * equal). Every exchanged row is a (long, long) pair — volume
+    * the window form measured at x100: 13.1 s vs 17.7 s broadcast /
+    * 18.8 s merge, shuffle 1.40 vs 2.00 GB, sigs equal; NOTES.md
+    * "gramreuse"). Every exchanged row is a (long, long) pair — volume
     * linear in total distinct grams; the window buffers one gram's
     * occurrence list at a time (spills past memory, never collects
     * corpus-wide). Known trade: a MEGA-df boilerplate gram (present
@@ -1922,35 +1922,7 @@ object Dedup {
       idCol: Column,
       textCol: Column,
       shingleK: Int = 8,
-      charsHint: Long = -1L): DataFrame =
-    ngramNoveltyImpl(df, idCol, textCol, shingleK, charsHint,
-      strategy = "window")
-
-  /** [[ngramNovelty]] with the df-attachment strategy exposed for the
-    * GramReuseProbe A/B (same rows under every strategy):
-    *
-    *  - `"window"` (the production default): df arrives as
-    *    `count(*) OVER (PARTITION BY g)` on the exchanged gram stream
-    *    — ONE exchange, ONE kernel pass, no join at all; the window's
-    *    per-group buffer is one gram's posting list (spills past
-    *    memory, never collects corpus-wide).
-    *  - `"merge"`: join-back hinted to sort-merge. NOTE (probe
-    *    finding): this does NOT buy exchange reuse — the df branch is
-    *    column-pruned to bare `g` rows while the gram side carries
-    *    `(id, g)`, so the two exchanges are not identical and the
-    *    kernel still runs twice, now behind an extra sort.
-    *  - `"broadcast"`: Catalyst's own choice for the join-back form
-    *    (the round-15 shape) — re-executes the kernel for the
-    *    broadcast branch (two map passes over the corpus). */
-  private[graft] def ngramNoveltyImpl(
-      df: DataFrame,
-      idCol: Column,
-      textCol: Column,
-      shingleK: Int,
-      charsHint: Long,
-      strategy: String): DataFrame = {
-    require(Set("window", "merge", "broadcast").contains(strategy),
-      s"unknown df-attachment strategy $strategy")
+      charsHint: Long = -1L): DataFrame = {
     require(shingleK >= 2, s"shingleK must be >= 2, got $shingleK")
     val par = df.sparkSession.sparkContext.defaultParallelism
     val totalChars =
@@ -1968,16 +1940,9 @@ object Dedup {
     // vms is per-doc distinct, so count(*) per hash IS the document
     // frequency — no pre-distinct pass needed; the window/grouping
     // rides the repartition's partitioning (no second exchange)
-    val withDf = strategy match {
-      case "window" =>
-        grams.withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("g")))
-      case pin =>
-        val dfs0 = grams.groupBy("g").agg(count(lit(1)).as("df"))
-        val dfs = if (pin == "merge") dfs0.hint("merge") else dfs0
-        grams.join(dfs, Seq("g"))
-    }
-    withDf
+    grams
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("g")))
       .groupBy("id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("df") === 1L, 1L).otherwise(0L)).as("n_novel"))
@@ -2078,9 +2043,10 @@ object Dedup {
     // pairs AND per-doc totals from ONE pass over the grouped table
     // (the ngramPairCounts unified-emission shape — round 16: the
     // separate pairsW/docW branches re-ran the kernel+grouping three
-    // times, GramReuseProbe measured it): doc-total rows ride along
-    // as (id, NULL) — `IF(false, x, NULL)` types the NULL from the id
-    // element itself, so the emission stays generic over id types.
+    // times; NOTES.md "gramreuse, ngramWeightedJaccard"): doc-total
+    // rows ride along as (id, NULL) — `IF(false, x, NULL)` types the
+    // NULL from the id element itself, so the emission stays generic
+    // over id types.
     val emitExpr = explode(expr(
       """concat(
            flatten(transform(ids, x ->
@@ -2115,8 +2081,8 @@ object Dedup {
     // without an eager cut the upstream candidate pipeline is PLANNED
     // once per consumer (q139 carried both dedup pipelines' subtrees
     // twice — 57-Exchange plan) and re-executes wherever the operator
-    // lacks an internal cache. GradeABProbe (same-JVM interleaved,
-    // round 17) measured sf0.1 a WASH (A uncut 4.34 s vs B cut
+    // lacks an internal cache. A same-JVM interleaved A/B (round 17,
+    // OPTIMIZATION_r17.md §3) measured sf0.1 a WASH (A uncut 4.34 s vs B cut
     // 4.33 s medians, arms hash-equal) because q18/q19's internal
     // caches absorb most of the duplication at working-set scale; the
     // cut is kept for the structural guarantee — each pipeline runs

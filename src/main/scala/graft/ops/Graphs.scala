@@ -118,9 +118,9 @@ object Graphs {
     // working-set-sized corpora whose plans carry no size). The task
     // budget is 32 MB of ESTIMATED state (~72 B/membership), a 4x
     // margin under the usual 128 MB: object buffers carry GC
-    // amplification flat-byte shuffles don't — GraphPartsProbe
-    // measured the x100 rung at 46.8 s / 12 g-edge with 32 partitions
-    // vs 34.0 s with 128 (arms content-hash-equal), and this rule
+    // amplification flat-byte shuffles don't — the x100 rung measured
+    // 46.8 s / 12 g-edge with 32 partitions vs 34.0 s with 128 (arms
+    // content-hash-equal; NOTES.md "q172 assortativity"), and this rule
     // lands in that band. `numPartitions` pins it explicitly (same
     // exchange COUNT either way — the groupBy's own shuffle is just
     // made explicit and parameterized).

@@ -732,9 +732,9 @@ object Sampling {
     // the 1M base rows once with 8 membership tests. 16 aggregate
     // buffer columns per pass stays inside the codegen sweet spot —
     // the r17 single-pass 64-wide fusion measured SLOWER; the 16-wide
-    // blocks measure 1.9× FASTER (Q207ABProbe, same-JVM interleaved,
-    // arms result-equal: A explode 2.33–4.07 s vs B blocks
-    // 1.17–1.92 s vs C explode+simplified-predicate 1.83–2.30 s).
+    // blocks measure 1.9× FASTER (OPTIMIZATION_r18.md "VERDICT item 9",
+    // same-JVM interleaved, arms result-equal: A explode 2.33–4.07 s
+    // vs B blocks 1.17–1.92 s vs C explode+simplified-predicate 1.83–2.30 s).
     // Membership simplifies to one string compare: md5's lowercase-hex
     // output < '8' ⇔ first hex digit ∈ 0..7 ('0'..'7' < '8' < 'a'),
     // the same bit the oracle's strpos form reads, without the

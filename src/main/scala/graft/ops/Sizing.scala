@@ -220,8 +220,9 @@ object Sizing {
 
   /** SemDeDup cell count: cells hold ~targetCellSize vectors so the
     * in-cell all-pairs work stays ~n*targetCellSize — linear in n, the
-    * Abbas et al. 2023 lever the round-7 CellScaleProbe measured
-    * (nlist 8 -> 80 at 20k vectors: 21.0 -> 3.46 s; NOTES.md). Clamped
+    * Abbas et al. 2023 lever measured in round 7 (nlist 8 -> 80 at
+    * 20k vectors: 21.0 -> 3.46 s; NOTES.md "Embedding-family scale
+    * ladder (round 7)"). Clamped
     * below at 8 (tiny corpora should still exercise the cell routing)
     * and above at 2^20 (a 1M-centroid quantizer stops being a bounded
     * driver statistic — past that, shard the corpus first). */

@@ -723,8 +723,9 @@ object Similarity extends Serializable {
     * then BIT-IDENTICAL to `cosFD(v,c)` — same min-length dot loop,
     * same full-length norm loops, same single-division order — so
     * every oracle and tie-break argument carries over unchanged
-    * (SizingProbe KIND=assign measured the flat scan 1.9x faster
-    * before this, with the norm caching compounding on top). */
+    * (the round-10 assignment A/B measured the flat scan 1.9x faster
+    * before this, with the norm caching compounding on top; NOTES.md
+    * "Branch-and-bound centroid scan"). */
   private def dotFD(a: Seq[Float], c: Array[Double]): Double = {
     val n = math.min(a.length, c.length)
     var dot = 0.0; var i = 0
@@ -1020,17 +1021,12 @@ object Similarity extends Serializable {
     * nlist = 2^16 it is 256 sims/row while effective pruning leaves
     * far fewer leaf survivors — so the supers are grouped once more
     * into ~nlist^(1/4) tier-2 cells and pruned wholesale. 96 is the
-    * MEASURED break-even (SizingProbe KIND=assign, 200k-row x100
-    * rung, back-to-back flat controls equal to 0.03%): at 64 supers
-    * (nlist 4096) the tier is a 3.6% LOSS (6.93 vs 6.69 s — the ~8
-    * extra sims/row save almost nothing), at 128 supers (nlist
-    * 16384) an 18% win (26.4 vs 32.2 s) — so the gate sits between.
-    * `GRAFT_HIER_MIN_NTOP` is the measurement lever (the
-    * `GRAFT_PAGERANK_CUT_EVERY` convention): SizingProbe KIND=assign
-    * A/Bs the tiers in one JVM by disabling the gate, it is not a
-    * user knob. */
-  private val HierMinNtop = sys.env.get("GRAFT_HIER_MIN_NTOP")
-    .map(_.toInt).getOrElse(96)
+    * MEASURED break-even (200k-row x100 rung, back-to-back flat
+    * controls equal to 0.03%; NOTES.md "Hierarchical tier-2 IVF"): at
+    * 64 supers (nlist 4096) the tier is a 3.6% LOSS (6.93 vs 6.69 s —
+    * the ~8 extra sims/row save almost nothing), at 128 supers (nlist
+    * 16384) an 18% win (26.4 vs 32.2 s) — so the gate sits between. */
+  private val HierMinNtop = 96
 
   /** The shared branch-and-bound walk of [[nearestIndexScanner]] and
     * [[assignNearest]] over [[centroidScanGroups]]'s super-cells, with
@@ -2069,10 +2065,11 @@ object Similarity extends Serializable {
     *    corpus probe finds >10% of cells unprunable): the cell join
     *    would materialize ~the full product as join rows — measured
     *    9× more expensive per pair than the closure kernel
-    *    (ContaminationProbe) — so the CHUNKED arm iterates
-    *    `maxBroadcastTest`-sized test chunks through the map-only
-    *    kernel, folding per-chunk winners; same exact output, driver
-    *    memory bounded by one chunk ([[contaminationChunked]]).
+    *    (NOTES.md "Cell-routed contamination ladder") — so the
+    *    CHUNKED arm iterates `maxBroadcastTest`-sized test chunks
+    *    through the map-only kernel, folding per-chunk winners; same
+    *    exact output, driver memory bounded by one chunk
+    *    ([[contaminationChunked]]).
     *    Chunk count is capped at 256 (1 chunk = 1 corpus scan), so
     *    for nTest > 256 × `maxBroadcastTest` the per-chunk driver
     *    footprint EXCEEDS the `maxBroadcastTest` bound — past 256
@@ -2152,8 +2149,9 @@ object Similarity extends Serializable {
         // Pruning fails (uniform-ish test geometry): the join would
         // materialize ~the full |corpus|×|test| product as rows —
         // measured 9× more expensive per pair than the closure kernel
-        // (ContaminationProbe). Same flops through the chunked kernel
-        // instead, driver memory bounded by one chunk.
+        // (NOTES.md "Cell-routed contamination ladder"). Same flops
+        // through the chunked kernel instead, driver memory bounded by
+        // one chunk.
         return contaminationChunked(c, t, nTest, maxBroadcastTest,
           threshold)
       } finally t.unpersist(false)
@@ -2187,11 +2185,11 @@ object Similarity extends Serializable {
       .encoderFor(schema)
     // per-row work is |test| * dim flops — the heaviest map kernel in
     // the library, so never leave it at scan parallelism (a one-split
-    // corpus file would serialize it; ContaminationProbe measured the
-    // single-task arm at ~319 s where 32-way took ~13). Gated on test
-    // size: below ~1k test vectors the kernel is light enough that
-    // the repartition's fixed shuffle would cost more than it buys
-    // (measured +0.16 s on q64's benchmark-sized test at sf0.1).
+    // corpus file would serialize it; the round-9 contamination ladder
+    // measured the single-task arm at ~319 s where 32-way took ~13).
+    // Gated on test size: below ~1k test vectors the kernel is light
+    // enough that the repartition's fixed shuffle would cost more than
+    // it buys (measured +0.16 s on q64's benchmark-sized test at sf0.1).
     val cPar =
       if (testVecs.length >= 1000)
         c.repartition(c.sparkSession.sparkContext.defaultParallelism)
@@ -2218,11 +2216,12 @@ object Similarity extends Serializable {
   }
 
   /** Fan-out cutoff for the cell-routed arm. Per surviving pair the
-    * cell join costs ~9× the closure kernel (ContaminationProbe,
-    * 50k-uniform set: 111 s as join rows vs 12.7 s through the
-    * kernel), so the join only wins when pruning removes ≳8/9 of the
-    * product; 0.1 sits just under the 1/9 crossover, preferring the
-    * bounded-memory chunked arm near the boundary. */
+    * cell join costs ~9× the closure kernel (NOTES.md "Cell-routed
+    * contamination ladder", 50k-uniform set: 111 s as join rows vs
+    * 12.7 s through the kernel), so the join only wins when pruning
+    * removes ≳8/9 of the product; 0.1 sits just under the 1/9
+    * crossover, preferring the bounded-memory chunked arm near the
+    * boundary. */
   private val CellArmMaxFanout = 0.1
 
   /** The cell-pruning bound check, shared VERBATIM by the candidates
@@ -2283,7 +2282,7 @@ object Similarity extends Serializable {
   /** The cell arm's scoring tail: exact cosine over the routed
     * candidates, then the (sim, -test_id) struct-max fold that
     * reproduces the closure kernel's lowest-id tie-break.
-    * Package-private so the probe/spec can pin THIS arm specifically
+    * Package-private so the spec can pin THIS arm specifically
     * (the public method routes by the fan-out estimate). */
   private[graft] def cellArmScore(assigned: DataFrame, candidates: DataFrame,
       threshold: Double): DataFrame =
@@ -2302,7 +2301,8 @@ object Similarity extends Serializable {
     * iterate the test set through [[broadcastMaxCosine]] in
     * `maxBroadcastTest`-sized chunks — the same total flops as the
     * full product, but through the tight map-only loop (9× cheaper per
-    * pair than join-row materialization, ContaminationProbe) with
+    * pair than join-row materialization; NOTES.md "Cell-routed
+    * contamination ladder") with
     * driver memory bounded by ONE chunk's vectors. Chunks are
     * murmur3-hash partitions of test_id (deterministic); each chunk's
     * winners are EAGERLY materialized (localCheckpoint, ≤ |corpus|
@@ -2414,11 +2414,11 @@ object Similarity extends Serializable {
   }
 
   /** The cell-routed arm's candidate generation, extracted so the
-    * scale probe (`graft.ContaminationProbe`) can count routing
-    * survivors with the SAME bound math the operator ships — never a
-    * re-derivation that could drift. Returns (assigned test rows with
-    * their cell + angle, corpus candidate rows fanned to the cells
-    * whose cosine upper bound reaches `threshold`, the driver-side
+    * spec can count routing survivors with the SAME bound math the
+    * operator ships — never a re-derivation that could drift. Returns
+    * (assigned test rows with their cell + angle, corpus candidate
+    * rows fanned to the cells whose cosine upper bound reaches
+    * `threshold`, the driver-side
     * cell stats (cid, centroid, radius) the arm-choice estimator
     * reads). Inputs must already carry the canonical column names
     * (`id`/`v`, `test_id`/`tv`) and `nTest` their already-counted test
@@ -2612,7 +2612,7 @@ object Similarity extends Serializable {
     val c = if (cacheCorpus) c0.cache() else c0
     // Auto-sizing (default): nlist ~ n/targetCellSize keeps cell
     // population — and so the in-cell all-pairs work per vector —
-    // constant as the corpus grows (the CellScaleProbe-measured lever;
+    // constant as the corpus grows (the measured lever;
     // Sizing.semDedupNlist). Explicit nlist skips the count pass.
     val nlistN =
       if (nlist == graft.ops.Sizing.Auto)

@@ -306,10 +306,10 @@ object Streaming {
     * scales with key cardinality only — the drift monitor a pipeline
     * leaves on, with the batch operator as its exact replay oracle.
     * At high key cardinality run it on the RocksDB state store
-    * (semantics are backend-independent — StateBackendProbe measured
-    * hash-equal outputs, ~10× less state memory and at-par-or-better
-    * wall clock at the 150k-key rung; see the README deployment
-    * note).
+    * (semantics are backend-independent — the round-19 rung table
+    * measured hash-equal outputs, ~10× less state memory and
+    * at-par-or-better wall clock at the 150k-key rung; NOTES.md
+    * "state backend" and the README deployment note).
     *
     * EXACTNESS CONTRACT: alarms are bit-identical to the batch
     * operator iff each key's points arrive in (ts, id) order ACROSS

@@ -468,7 +468,7 @@ class DedupKernelSpec extends SparkSpec {
   }
 
   test("ngramNovelty/ngramWeightedJaccard plan pin: ONE shingle-kernel " +
-      "pass (window df / unified emission — GramReuseProbe winners: " +
+      "pass (window df / unified emission — gramreuse A/B winners: " +
       "x100 11.3 vs 14.3 s and 92.5 vs 143.6 s)") {
     val df = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val nov = Dedup.ngramNovelty(df, col("doc_id"), col("text"),

@@ -56,8 +56,8 @@ class SizingSpec extends SparkSpec {
   }
 
   test("semDedupNlist: constant cell population, clamped") {
-    // the CellScaleProbe point: 20k vectors / 250-vector cells = 80 —
-    // the measured 21.0 -> 3.46 s lever value, now the default
+    // the round-7 SemDeDup ladder point: 20k vectors / 250-vector
+    // cells = 80 — the measured 21.0 -> 3.46 s lever value, now the default
     assert(Sizing.semDedupNlist(20000) == 80)
     assert(Sizing.semDedupNlist(2000) == 8)   // floor keeps routing real
     assert(Sizing.semDedupNlist(100) == 8)
